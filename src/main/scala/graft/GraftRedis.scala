@@ -29,14 +29,19 @@ object GraftRedis {
   def connect(spark: SparkSession, hostPort: String, auth: String): String =
     functions.RedduckFunctions.redisConnect(spark, hostPort, Some(auth))
 
+  /** The session target as connector options: host, port and, when
+    * [[connect]] stored one, the credential.
+    */
+  private def sessionOptions(spark: SparkSession): Map[String, String] = {
+    val endpoint = functions.RedduckFunctions.sessionEndpoint(spark)
+    Map("host" -> endpoint.host, "port" -> endpoint.port.toString) ++
+      endpoint.auth.map("password" -> _)
+  }
+
   private def reader(spark: SparkSession, fmt: String, pattern: String,
       numPartitionsPatterns: Seq[String]) = {
-    val (host, port) = functions.RedduckFunctions.target(spark)
-    val base0 = spark.read.format(fmt)
-      .option("host", host).option("port", port.toString)
+    val base = spark.read.format(fmt).options(sessionOptions(spark))
       .option("pattern", pattern)
-    val base = functions.RedduckFunctions.sessionAuth(spark)
-      .map(a => base0.option("password", a)).getOrElse(base0)
     (if (numPartitionsPatterns.nonEmpty)
       base.option("partition.patterns", numPartitionsPatterns.mkString(","))
     else base).load()
@@ -57,27 +62,17 @@ object GraftRedis {
   /** Write (key STRING, value STRING) rows back to Redis: per-partition
     * pipelined SET batches (idempotent upsert — safe under task retry).
     */
-  def writeKv(df: DataFrame): Unit = {
-    val (host, port) = functions.RedduckFunctions.target(df.sparkSession)
-    val w0 = df.write.format("redis-kv")
-      .option("host", host).option("port", port.toString)
-    functions.RedduckFunctions.sessionAuth(df.sparkSession)
-      .map(a => w0.option("password", a)).getOrElse(w0)
+  def writeKv(df: DataFrame): Unit =
+    df.write.format("redis-kv").options(sessionOptions(df.sparkSession))
       .mode("append").save()
-  }
 
   /** Streaming keyspace → (key_name STRING): each micro-batch emits the
     * keys that appeared since the previous snapshot (see
     * `sources.RedisKeyStreamProvider` for the fault-tolerance contract).
     */
-  def keyStream(spark: SparkSession, pattern: String = "*"): DataFrame = {
-    val (host, port) = functions.RedduckFunctions.target(spark)
-    val r0 = spark.readStream.format("redis-key-stream")
-      .option("host", host).option("port", port.toString)
-      .option("pattern", pattern)
-    functions.RedduckFunctions.sessionAuth(spark)
-      .map(a => r0.option("password", a)).getOrElse(r0).load()
-  }
+  def keyStream(spark: SparkSession, pattern: String = "*"): DataFrame =
+    spark.readStream.format("redis-key-stream").options(sessionOptions(spark))
+      .option("pattern", pattern).load()
 
   /** Register the SQL scalar surface AND the table-valued functions on
     * the session — after this, the reference's primary syntax parses
@@ -154,24 +149,16 @@ object GraftRedis {
       shards: Seq[String] = Nil): DataFrame =
     reader(spark, "redis-hash", pattern, shards)
 
-  private def streamOpts(r0: org.apache.spark.sql.DataFrameReader,
-      spark: SparkSession): org.apache.spark.sql.DataFrameReader = {
-    val (host, port) = functions.RedduckFunctions.target(spark)
-    val r1 = r0.option("host", host).option("port", port.toString)
-    functions.RedduckFunctions.sessionAuth(spark)
-      .map(a => r1.option("password", a)).getOrElse(r1)
-  }
-
   /** Redis Stream contents, batch face → (entry_id, fields MAP). */
   def stream(spark: SparkSession, key: String): DataFrame =
-    streamOpts(spark.read.format("redis-stream"), spark)
+    spark.read.format("redis-stream").options(sessionOptions(spark))
       .option("stream", key).load()
 
   /** Several streams at once, batch face → (stream, entry_id, fields)
     * — the multi-stream read's leading origin column.
     */
   def streams(spark: SparkSession, keys: Seq[String]): DataFrame =
-    streamOpts(spark.read.format("redis-stream"), spark)
+    spark.read.format("redis-stream").options(sessionOptions(spark))
       .option("streams", keys.mkString(",")).load()
 
   /** Trim a stream to (approximately) its newest `maxLen` entries —
@@ -181,12 +168,9 @@ object GraftRedis {
     * (inline `XADD ... MAXLEN ~ n`).
     */
   def trimStream(spark: SparkSession, key: String, maxLen: Long,
-      approx: Boolean = true): Long = {
-    val (host, port) = functions.RedduckFunctions.target(spark)
-    net.RedisConnection.withPooled(host, port,
-        functions.RedduckFunctions.sessionAuth(spark))(c =>
+      approx: Boolean = true): Long =
+    net.RedisConnection.withPooled(functions.RedduckFunctions.sessionEndpoint(spark))(c =>
       net.RedisCommands.xtrim(c, key, maxLen, approx))
-  }
 
   /** Redis Stream as a fault-tolerant Structured Streaming source:
     * entry-id offsets, exactly-once replay (see
@@ -194,26 +178,15 @@ object GraftRedis {
     */
   def entryStream(spark: SparkSession, key: String,
       maxEntriesPerTrigger: Option[Int] = None): DataFrame = {
-    val (host, port) = functions.RedduckFunctions.target(spark)
-    val r0 = spark.readStream.format("redis-stream")
-      .option("host", host).option("port", port.toString)
+    val r = spark.readStream.format("redis-stream").options(sessionOptions(spark))
       .option("stream", key)
-    val r1 = maxEntriesPerTrigger
-      .map(n => r0.option("maxEntriesPerTrigger", n.toString)).getOrElse(r0)
-    functions.RedduckFunctions.sessionAuth(spark)
-      .map(a => r1.option("password", a)).getOrElse(r1).load()
+    maxEntriesPerTrigger.fold(r)(n => r.option("maxEntriesPerTrigger", n.toString)).load()
   }
 
   /** XADD rows into a Redis Stream (batch face; at-least-once — see
     * the sink's contract in `RedisStreamSource.scala`).
     */
-  def writeStreamEntries(df: DataFrame, key: String): Unit = {
-    val (host, port) = functions.RedduckFunctions.target(df.sparkSession)
-    val w0 = df.write.format("redis-stream")
-      .option("host", host).option("port", port.toString)
-      .option("stream", key)
-    functions.RedduckFunctions.sessionAuth(df.sparkSession)
-      .map(a => w0.option("password", a)).getOrElse(w0)
-      .mode("append").save()
-  }
+  def writeStreamEntries(df: DataFrame, key: String): Unit =
+    df.write.format("redis-stream").options(sessionOptions(df.sparkSession))
+      .option("stream", key).mode("append").save()
 }

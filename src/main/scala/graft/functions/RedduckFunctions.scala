@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MapType, StringType, StructType}
 
-import graft.net.{RedisCommands, RedisConnection}
+import graft.net.{RedisCommands, RedisConnection, RedisEndpoint}
 
 /** Scalar-function parity surface (reference registrations at
   * /root/reference/src/redduck_extension.cpp:348-362).
@@ -66,7 +66,7 @@ object RedduckFunctions {
     // password (the server answers "ERR Client sent AUTH, but no password
     // is set" and the eager ping fails loudly) with no API way out.
     // connect(target, None) therefore also DROPS the persisted credential.
-    val c = new RedisConnection(host, port, auth = auth)
+    val c = new RedisConnection(RedisEndpoint(host, port, auth))
     try c.ping() finally c.close()
     spark.conf.set(HostConf, host)
     spark.conf.set(PortConf, port.toString)
@@ -80,13 +80,22 @@ object RedduckFunctions {
   def target(spark: SparkSession): (String, Int) =
     (spark.conf.get(HostConf, "127.0.0.1"), spark.conf.get(PortConf, "6379").toInt)
 
+  /** The endpoint a lookup uses: `hostPort`/`auth` when given, the
+    * session's target and credential otherwise. Built once on the
+    * driver; executor closures capture the value.
+    */
+  def sessionEndpoint(spark: SparkSession, hostPort: Option[(String, Int)] = None,
+      auth: Option[String] = None): RedisEndpoint = {
+    val (host, port) = hostPort.getOrElse(target(spark))
+    RedisEndpoint(host, port, auth.orElse(sessionAuth(spark)))
+  }
+
   /** Register the SQL-facing UDFs on a session. `redis_get`/`redis_hgetall`
     * capture the session's target at registration time (executor closures
     * cannot read driver conf).
     */
   def registerAll(spark: SparkSession): Unit = {
-    val (host, port) = target(spark)
-    val auth = sessionAuth(spark)
+    val endpoint = sessionEndpoint(spark)
     val missingDefault: String = if (legacyEmpty(spark)) "" else null
 
     // demo scalars, kept for smoke-test parity (redduck_extension.cpp:17-40)
@@ -99,12 +108,12 @@ object RedduckFunctions {
     // was set at registration time.
     spark.udf.register("redis_get", (key: String) =>
       if (key == null) null
-      else RedisConnection.withPooled(host, port, auth)(c =>
+      else RedisConnection.withPooled(endpoint)(c =>
         RedisCommands.get(c, key).getOrElse(missingDefault)))
 
     spark.udf.register("redis_hgetall", (key: String) =>
       if (key == null) null
-      else RedisConnection.withPooled(host, port, auth)(c => RedisCommands.hgetall(c, key)))
+      else RedisConnection.withPooled(endpoint)(c => RedisCommands.hgetall(c, key)))
   }
 
   /** Batched `redis_get`: resolves `keyCol` for a whole DataFrame with one
@@ -117,8 +126,7 @@ object RedduckFunctions {
       batchSize: Int = 512, hostPort: Option[(String, Int)] = None,
       auth: Option[String] = None): DataFrame = {
     val spark = df.sparkSession
-    val (host, port) = hostPort.getOrElse(target(spark))
-    val creds = auth.orElse(sessionAuth(spark))
+    val endpoint = sessionEndpoint(spark, hostPort, auth)
     val missingDefault: String = if (legacyEmpty(spark)) "" else null
     val schema = StructType(df.schema.fields :+
       org.apache.spark.sql.types.StructField(valueCol, StringType, nullable = true))
@@ -127,7 +135,7 @@ object RedduckFunctions {
     df.mapPartitions { rows =>
       rows.grouped(batchSize).flatMap { group =>
         val keys = group.map(_.getString(keyIdx))
-        val values = RedisConnection.withPooled(host, port, creds)(c => RedisCommands.mget(c, keys))
+        val values = RedisConnection.withPooled(endpoint)(c => RedisCommands.mget(c, keys))
         group.iterator.zip(values.iterator).map { case (row, v) =>
           org.apache.spark.sql.Row.fromSeq(row.toSeq :+ v.getOrElse(missingDefault))
         }
@@ -142,12 +150,10 @@ object RedduckFunctions {
     */
   def withHashFields(df: DataFrame, keyCol: String, structSchema: Option[StructType] = None,
       hostPort: Option[(String, Int)] = None, auth: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    val (host, port) = hostPort.getOrElse(target(spark))
-    val creds = auth.orElse(sessionAuth(spark))
+    val endpoint = sessionEndpoint(df.sparkSession, hostPort, auth)
     val hget = udf((key: String) =>
       if (key == null) null
-      else RedisConnection.withPooled(host, port, creds)(c => RedisCommands.hgetall(c, key)))
+      else RedisConnection.withPooled(endpoint)(c => RedisCommands.hgetall(c, key)))
     val withMap = df.withColumn("hash", hget(col(keyCol)))
     structSchema match {
       case None => withMap

@@ -15,6 +15,7 @@ object RedisCommands {
     * `TYPE` filter (public Redis ≥6.0 surface) trims mixed keyspaces
     * SERVER-side — on a keyspace where hashes share a prefix with
     * strings/streams, the non-matching keys never cross the wire.
+    * The connector's cursor loop is `sources.RedisScanWalker`.
     *
     * @return (nextCursor, keys); cursor "0" = exhausted
     */
@@ -57,11 +58,13 @@ object RedisCommands {
   /** Run `f` against a redirect target. ASK redirects require the ASKING
     * prefix on the target node (the slot is mid-migration and not yet owned
     * there — without it the target answers MOVED back and the query fails);
-    * MOVED targets own the slot and take the plain command.
+    * MOVED targets own the slot and take the plain command. The target is
+    * the seed connection's endpoint at the new address: a cluster shares
+    * one deployment's credentials, TLS and protocol, so the hop keeps them.
     */
-  private def onRedirectTarget[T](host: String, port: Int, ask: Boolean,
-      auth: Option[String])(f: RedisConnection => T): T =
-    RedisConnection.withPooled(host, port, auth) { rc =>
+  private def onRedirectTarget[T](seed: RedisConnection, host: String, port: Int,
+      ask: Boolean)(f: RedisConnection => T): T =
+    RedisConnection.withPooled(seed.endpoint.at(host, port)) { rc =>
       if (ask) rc.command("ASKING") match {
         case Err(m) => throw new java.io.IOException(s"ASKING refused: $m")
         case _ => ()
@@ -73,23 +76,20 @@ object RedisCommands {
     * from the reference's empty-string, redis_client.cpp:232-236).
     * Follows one cluster redirect.
     */
-  def get(c: RedisConnection, key: String): Option[String] =
-    c.command("GET", key) match {
+  def get(c: RedisConnection, key: String): Option[String] = {
+    def parse(v: RespValue, afterRedirect: Boolean): Option[String] = v match {
       case b: Bulk => Some(b.text)
       case Null => None
       case Err(m) => redirectTarget(m) match {
-        case Some((h, p, ask)) => onRedirectTarget(h, p, ask, c.auth) { rc =>
-          rc.command("GET", key) match {
-            case b: Bulk => Some(b.text)
-            case Null => None
-            case Err(m2) => throw new java.io.IOException(s"GET error after redirect: $m2")
-            case other => fail("GET reply", other)
-          }
-        }
-        case None => throw new java.io.IOException(s"GET error: $m")
+        case Some((h, p, ask)) if !afterRedirect =>
+          onRedirectTarget(c, h, p, ask)(rc => parse(rc.command("GET", key), afterRedirect = true))
+        case _ => throw new java.io.IOException(
+          s"GET error${if (afterRedirect) " after redirect" else ""}: $m")
       }
       case other => fail("GET reply", other)
     }
+    parse(c.command("GET", key), afterRedirect = false)
+  }
 
   /** Batched point lookups — one round trip for the whole batch.
     * Follows ONE cluster redirect for the whole batch: the partition
@@ -112,7 +112,7 @@ object RedisCommands {
       }
       c.command("MGET" +: keys: _*) match {
         case Err(m) => redirectTarget(m) match {
-          case Some((h, p, ask)) => onRedirectTarget(h, p, ask, c.auth) { rc =>
+          case Some((h, p, ask)) => onRedirectTarget(c, h, p, ask) { rc =>
             parse(rc.command("MGET" +: keys: _*), " after redirect")
           }
           case None => throw new java.io.IOException(s"MGET error: $m")
@@ -150,15 +150,10 @@ object RedisCommands {
     */
   def hgetall(c: RedisConnection, key: String): Map[String, String] = {
     def parse(v: RespValue, afterRedirect: Boolean): Map[String, String] = v match {
-      case Arr(items) =>
-        items.grouped(2).collect {
-          case Vector(k: Bulk, value: Bulk) => k.text -> value.text
-        }.toMap
-      case Mp(entries) =>
-        entries.collect { case (k: Bulk, value: Bulk) => k.text -> value.text }.toMap
+      case FieldMap(m) => m
       case Err(m) => redirectTarget(m) match {
         case Some((h, p, ask)) if !afterRedirect =>
-          onRedirectTarget(h, p, ask, c.auth)(rc => parse(rc.command("HGETALL", key), afterRedirect = true))
+          onRedirectTarget(c, h, p, ask)(rc => parse(rc.command("HGETALL", key), afterRedirect = true))
         case _ => throw new java.io.IOException(s"HGETALL error: $m")
       }
       case other => fail("HGETALL reply", other)
@@ -166,16 +161,22 @@ object RedisCommands {
     parse(c.command("HGETALL", key), afterRedirect = false)
   }
 
+  /** An HGETALL reply's fields: a RESP2 flat array or a RESP3 map. */
+  private object FieldMap {
+    def unapply(v: RespValue): Option[Map[String, String]] = v match {
+      case Arr(items) =>
+        Some(items.grouped(2).collect { case Vector(k: Bulk, f: Bulk) => k.text -> f.text }.toMap)
+      case Mp(entries) =>
+        Some(entries.collect { case (k: Bulk, f: Bulk) => k.text -> f.text }.toMap)
+      case _ => None
+    }
+  }
+
   /** Batched HGETALL — one pipelined round trip for a whole SCAN page. */
   def hgetallPipelined(c: RedisConnection, keys: Seq[String]): Seq[Map[String, String]] =
     if (keys.isEmpty) Nil
     else c.pipeline(keys.map(k => Seq("HGETALL", k))).map {
-      case Arr(items) =>
-        items.grouped(2).collect {
-          case Vector(k: Bulk, v: Bulk) => k.text -> v.text
-        }.toMap
-      case Mp(entries) =>
-        entries.collect { case (k: Bulk, v: Bulk) => k.text -> v.text }.toMap
+      case FieldMap(m) => m
       // a non-hash key answers WRONGTYPE on a real server: the readers'
       // documented contract is "string-typed keys contribute an empty
       // map", so realize it HERE (a pattern like user:* routinely
@@ -323,12 +324,6 @@ object RedisCommands {
       case Int64(n) => n
       case Err(m) => throw new java.io.IOException(s"XLEN error: $m")
       case other => fail("XLEN reply", other)
-    }
-
-  def set(c: RedisConnection, key: String, value: String): Unit =
-    c.command("SET", key, value) match {
-      case Simple("OK") => ()
-      case other => fail("SET reply", other)
     }
 
   private def fail(what: String, got: RespValue): Nothing =

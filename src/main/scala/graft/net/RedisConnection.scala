@@ -20,17 +20,19 @@ import graft.resp.{RespCodec, RespValue}
   * serializes all I/O behind two process-global mutexes; we scale by
   * giving each Spark partition its own connection instead).
   */
-final class RedisConnection(val host: String, val port: Int, timeoutMs: Int = 5000,
-    val auth: Option[String] = None, val tls: Boolean = false,
-    val tlsTrustAll: Boolean = false, val resp3: Boolean = false)
-    extends AutoCloseable {
+final class RedisConnection(val endpoint: RedisEndpoint) extends AutoCloseable {
+  import endpoint.{auth, host, port, resp3}
+
+  /** Plain, unauthenticated RESP2 connection. */
+  def this(host: String, port: Int) = this(RedisEndpoint(host, port))
 
   private val socket: Socket = {
+    val timeoutMs = RedisConnection.TimeoutMs
     val plain = new Socket()
     plain.setTcpNoDelay(true)
     plain.setSoTimeout(timeoutMs)
     plain.connect(new InetSocketAddress(host, port), timeoutMs)
-    if (!tls) plain
+    if (!endpoint.tls) plain
     else {
       // TLS-wrap the connected socket (the rediss:// deployment shape).
       // `tlsTrustAll` skips chain validation for self-signed test/dev
@@ -38,7 +40,7 @@ final class RedisConnection(val host: String, val port: Int, timeoutMs: Int = 50
       // the JVM's CA store (or a custom one via standard javax.net.ssl
       // system properties).
       val factory =
-        if (!tlsTrustAll)
+        if (!endpoint.tlsTrustAll)
           javax.net.ssl.SSLContext.getDefault.getSocketFactory
         else {
           val ctx = javax.net.ssl.SSLContext.getInstance("TLS")
@@ -187,57 +189,34 @@ final class RedisConnection(val host: String, val port: Int, timeoutMs: Int = 50
 }
 
 object RedisConnection {
-  /** Per-JVM connection cache keyed by target + thread: Spark partitions
-    * run on a bounded executor thread pool, so this bounds connections at
-    * (threads × targets) while never sharing a socket across threads.
-    */
-  private val pool = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Option[String], Boolean, Boolean, Boolean, Long), RedisConnection]()
+  /** Connect and read timeout per socket. */
+  val TimeoutMs = 5000
 
-  def pooled(host: String, port: Int, auth: Option[String] = None,
-      tls: Boolean = false, tlsTrustAll: Boolean = false,
-      resp3: Boolean = false): RedisConnection = {
-    val key = (host, port, auth, tls, tlsTrustAll, resp3,
-      Thread.currentThread().getId)
+  /** Per-JVM connection cache keyed by endpoint + thread: Spark partitions
+    * run on a bounded executor thread pool, so this bounds connections at
+    * (threads × endpoints) while never sharing a socket across threads.
+    */
+  private val pool =
+    new java.util.concurrent.ConcurrentHashMap[(RedisEndpoint, Long), RedisConnection]()
+
+  /** Run `f` with this thread's pooled connection to `endpoint`,
+    * evicting it on I/O failure so the next call reconnects.
+    */
+  def withPooled[T](endpoint: RedisEndpoint)(f: RedisConnection => T): T = {
+    val key = (endpoint, Thread.currentThread().getId)
     var c = pool.get(key)
     if (c == null || !c.isOpen) {
       if (c != null) { // close the dead socket before replacing: no fd leak
         try c.close() catch { case _: Throwable => () }
       }
-      c = new RedisConnection(host, port, auth = auth, tls = tls,
-        tlsTrustAll = tlsTrustAll, resp3 = resp3)
+      c = new RedisConnection(endpoint)
       pool.put(key, c)
     }
-    c
-  }
-
-  /** Close and drop every pooled connection (entries for terminated
-    * threads are otherwise only evicted on a failed call — long-lived
-    * JVMs with churning pools should sweep between jobs).
-    */
-  def closeAll(): Unit = {
-    val it = pool.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      try e.getValue.close() catch { case _: Throwable => () }
-      it.remove()
-    }
-  }
-
-  /** Run `f` with a pooled connection, evicting it on I/O failure so the
-    * next call reconnects.
-    */
-  def withPooled[T](host: String, port: Int, auth: Option[String] = None,
-      tls: Boolean = false, tlsTrustAll: Boolean = false,
-      resp3: Boolean = false)(
-      f: RedisConnection => T): T = {
-    val key = (host, port, auth, tls, tlsTrustAll, resp3,
-      Thread.currentThread().getId)
-    val c = pooled(host, port, auth, tls, tlsTrustAll, resp3)
     try f(c)
     catch {
       case e: java.io.IOException =>
-        pool.remove(key); try c.close() catch { case _: Throwable => () }
+        pool.remove(key)
+        try c.close() catch { case _: Throwable => () }
         throw e
     }
   }

@@ -1398,9 +1398,16 @@ object CurationOps {
     */
   val SmallTokenizerWords: Long = 1000000L
 
+  /** The bound from `spark.graft.smallTokenizerWords`: the default only
+    * when the key is unset; a malformed value (say `1m`) fails naming
+    * the key rather than silently meaning the default.
+    */
   private def smallTokenizerWords(spark: org.apache.spark.sql.SparkSession): Long =
-    scala.util.Try(spark.conf.get("spark.graft.smallTokenizerWords").toLong)
-      .getOrElse(SmallTokenizerWords)
+    spark.conf.getOption("spark.graft.smallTokenizerWords") match {
+      case None => SmallTokenizerWords
+      case Some(raw) => raw.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"spark.graft.smallTokenizerWords must be a whole number of words, got '$raw'"))
+    }
 
   /** Spark's (and DuckDB's) string sort order is UTF-8 BINARY byte
     * order (`UTF8String.compareTo`); Java's `String.compareTo` is
@@ -1457,6 +1464,7 @@ object CurationOps {
     */
   private def wordCountsOrFrame(docs: DataFrame, textCol: String)
       : Either[Array[(String, Long)], DataFrame] = {
+    val bound = smallTokenizerWords(docs.sparkSession) // before any job: a bad conf fails fast
     val wc = docs
       .select(explode(TextOps.tokens(col(textCol))).as("w"))
       .filter(col("w") =!= "")
@@ -1464,7 +1472,7 @@ object CurationOps {
       .persist()
     val nWords = wc.count() // materializes the cache for either route
     val res =
-      if (nWords <= smallTokenizerWords(docs.sparkSession))
+      if (nWords <= bound)
         Left(wc.collect().map(r => (r.getString(0), r.getLong(1))))
       else
         Right(wc.select(col("cnt"),

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.util
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -12,25 +11,35 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.net.{RedisCommands, RedisConnection}
+import graft.net.{RedisCommands, RedisConnection, RedisEndpoint}
 
 /** DataSource V2 connectors for the Redis keyspace — the Spark-native
   * re-expression of the reference's `redis_scan` TableFunction
   * (/root/reference/src/redduck_extension.cpp:125-322) and its
-  * documented-but-unimplemented `redis_kv` (README.md:29-31).
+  * documented-but-unimplemented `redis_kv`/`redis_hgetall`
+  * (README.md:29-38).
   *
   *   spark.read.format("redis-scan").option("host", h).option("port", p)
   *     .option("pattern", "user:*").load()          // → (key_name STRING)
   *   spark.read.format("redis-kv")...load()          // → (key, value)
+  *   spark.read.format("redis-hash")...load()        // → (key, fields MAP)
+  *
+  * The three formats are one table ([[RedisTable]]) in three modes
+  * ([[RedisSources.Mode]]), so filter pushdown, LIMIT pushdown and
+  * partition planning exist once. Connection options parse into one
+  * [[graft.net.RedisEndpoint]] (address, credential, TLS, protocol)
+  * that every partition, writer and redirect carries whole. Every SCAN
+  * the connector sends goes through one cursor loop,
+  * [[RedisScanWalker]].
   *
   * Scale design: Redis `SCAN` is one logical cursor, so parity mode is a
   * single input partition (≈ the reference's hard `MaxThreads()==1`,
   * redduck_extension.cpp:154-156). The `partition.patterns` option
   * shards the keyspace into N disjoint glob patterns — one partition,
-  * connection, and cursor each — which is how the source spreads over a
-  * cluster (per-slot/hash-tag sharding on Redis Cluster plugs into the
-  * same seam). Each partition owns its connection; nothing is shared
-  * (the reference serializes everything behind process-global mutexes).
+  * connection, and cursor each — and `partition.mode=cluster` plans one
+  * partition per cluster master. Each partition owns its connection;
+  * nothing is shared (the reference serializes everything behind
+  * process-global mutexes).
   *
   * Predicate pushdown translates key-column filters into server-side
   * `MATCH` globs (resurrecting the intent of the reference's dead
@@ -46,11 +55,20 @@ object RedisSources {
     StructField("key", StringType, nullable = false),
     StructField("fields", MapType(StringType, StringType, valueContainsNull = false), nullable = false)))
 
-  final case class Options(host: String, port: Int, pattern: String, count: Int,
+  /** What a Redis table reads per matched key: its name, its string
+    * value (one pipelined MGET per SCAN page) or its hash fields (one
+    * pipelined HGETALL batch per page).
+    */
+  sealed abstract class Mode(val format: String, val schema: StructType) {
+    def keyCol: String = schema.fieldNames.head
+  }
+  case object Keys extends Mode("redis-scan", ScanSchema)
+  case object Kv extends Mode("redis-kv", KvSchema)
+  case object Hash extends Mode("redis-hash", HashSchema)
+
+  final case class Options(endpoint: RedisEndpoint, pattern: String, count: Int,
       partitionPatterns: Seq[String], slots: Int, clusterMode: Boolean,
-      auth: Option[String] = None, tls: Boolean = false,
-      tlsTrustAll: Boolean = false, scanType: Option[String] = None,
-      resp3: Boolean = false) {
+      scanType: Option[String] = None) {
     /** Disjoint pattern lists, one per input partition. */
     def effectivePatterns(pushed: Option[String]): Seq[Seq[String]] = pushed match {
       case Some(p) => Seq(Seq(p))
@@ -59,13 +77,34 @@ object RedisSources {
         else if (slots > 1) slotPatterns(pattern, slots)
         else Seq(Seq(pattern))
     }
+
+    /** `host:port, pattern` — the table-name suffix every format shows. */
+    def target: String = s"${endpoint.host}:${endpoint.port}, $pattern"
   }
 
+  /** Parse the connector options. Every malformed value fails here,
+    * naming the option — never a bare "For input string" from deep in a
+    * task, and never a silently empty or endless scan (`scan.count` < 1
+    * is rejected by real Redis too).
+    */
   def parseOptions(m: util.Map[String, String]): Options = {
     val o = new CaseInsensitiveStringMap(m)
-    val opts = Options(
+    def int(key: String, default: Int, min: Int, max: Int = Int.MaxValue): Int = {
+      val raw = o.getOrDefault(key, default.toString)
+      val v = raw.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"option '$key' must be an integer, got '$raw'"))
+      if (v < min || v > max) throw new IllegalArgumentException(
+        s"option '$key' must be in $min..$max, got $v")
+      v
+    }
+    def bool(key: String): Boolean = {
+      val raw = o.getOrDefault(key, "false")
+      raw.toBooleanOption.getOrElse(throw new IllegalArgumentException(
+        s"option '$key' must be true or false, got '$raw'"))
+    }
+    val endpoint = RedisEndpoint(
       host = o.getOrDefault("host", "127.0.0.1"),
-      port = o.getOrDefault("port", "6379").toInt,
+      port = int("port", 6379, min = 1, max = 65535),
       // requirepass / ACL credentials: "password" or "user password".
       // Preferred option name is "password" — it matches Spark's default
       // SQL-options redaction regex, so EXPLAIN/UI plan dumps mask it;
@@ -73,10 +112,22 @@ object RedisSources {
       auth = Option(o.get("password")).orElse(Option(o.get("auth"))).filter(_.nonEmpty),
       // rediss://-style transport: TLS-wrap every connection;
       // tls.trustAll accepts self-signed certs (test/dev ONLY)
-      tls = o.getOrDefault("tls", "false").toBoolean,
-      tlsTrustAll = o.getOrDefault("tls.trustAll", "false").toBoolean,
+      tls = bool("tls"),
+      tlsTrustAll = bool("tls.trustAll"),
+      // protocol negotiation: .option("resp", "3") sends HELLO 3 on every
+      // connection (loud failure on pre-6.0 servers) — reply SHAPES differ
+      // (map-typed HGETALL, set frames) but the parsed rows are identical,
+      // pinned by spec
+      resp3 = o.getOrDefault("resp", "2") match {
+        case "2" => false
+        case "3" => true
+        case other => throw new IllegalArgumentException(
+          s"resp must be '2' (default) or '3', got '$other'")
+      })
+    val opts = Options(
+      endpoint = endpoint,
       pattern = o.getOrDefault("pattern", "*"),
-      count = o.getOrDefault("scan.count", "2048").toInt, // reference batch size, resp_parser.cpp:159-161
+      count = int("scan.count", 2048, min = 1), // reference batch size, resp_parser.cpp:159-161
       // `SCAN ... TYPE t` server-side type filter (Redis ≥6.0): opt-in
       // so existing plans stay byte-identical; on a mixed keyspace
       // `.option("scan.type", "hash")` keeps string/stream keys from
@@ -87,19 +138,9 @@ object RedisSources {
           s"scan.type must be one of ${valid.toSeq.sorted.mkString("/")}, got '$t'")
         t.toLowerCase
       },
-      // protocol negotiation: .option("resp", "3") sends HELLO 3 on every
-      // connection (loud failure on pre-6.0 servers) — reply SHAPES differ
-      // (map-typed HGETALL, set frames) but the parsed rows are identical,
-      // pinned by spec
-      resp3 = o.getOrDefault("resp", "2") match {
-        case "2" => false
-        case "3" => true
-        case other => throw new IllegalArgumentException(
-          s"resp must be '2' (default) or '3', got '$other'")
-      },
       partitionPatterns = Option(o.get("partition.patterns")).toSeq
         .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty)),
-      slots = o.getOrDefault("partition.slots", "0").toInt,
+      slots = int("partition.slots", 0, min = 0),
       clusterMode = o.getOrDefault("partition.mode", "") match {
         case "" => false
         case "cluster" => true
@@ -125,8 +166,7 @@ object RedisSources {
     */
   def clusterPartitions(opts: Options, pushed: Option[String],
       limit: Option[Int], topN: Option[TopN]): Array[InputPartition] = {
-    val conn = new RedisConnection(opts.host, opts.port, auth = opts.auth,
-      tls = opts.tls, tlsTrustAll = opts.tlsTrustAll)
+    val conn = new RedisConnection(opts.endpoint)
     val ranges = try RedisCommands.clusterSlots(conn) finally conn.close()
     val masters = ranges.map(r => (r.host, r.port)).distinct
     val pats = Seq(pushed.getOrElse(opts.pattern))
@@ -137,11 +177,9 @@ object RedisSources {
       // them instead of returning a silently short result.
       val owned = ranges.filter(r => r.host == h && r.port == p)
         .map(r => (r.start, r.end))
-      // cluster nodes share the deployment's credentials
-      RedisInputPartition(h, p, pats, opts.count, limit, topN,
-        auth = opts.auth, tls = opts.tls,
-        tlsTrustAll = opts.tlsTrustAll, ownedSlots = owned,
-        scanType = opts.scanType, resp3 = opts.resp3): InputPartition
+      // cluster nodes share the deployment's credentials and transport
+      RedisInputPartition(opts.endpoint.at(h, p), pats, opts.count, limit, topN,
+        ownedSlots = owned, scanType = opts.scanType): InputPartition
     }.toArray
   }
 
@@ -157,9 +195,10 @@ object RedisSources {
     * follow one MOVED/ASK hop, so an in-flight migration only aborts
     * the scan when ownership actually changed.
     */
-  def verifySlotOwnership(conn: RedisConnection, host: String, port: Int,
-      owned: Seq[(Int, Int)]): Unit = {
+  def verifySlotOwnership(conn: RedisConnection, owned: Seq[(Int, Int)]): Unit = {
     if (owned.isEmpty) return
+    val host = conn.endpoint.host
+    val port = conn.endpoint.port
     val now = RedisCommands.clusterSlots(conn) // re-validates 0..16383 coverage
     // every overlap of a plan-time range with a range now owned ELSEWHERE
     // is a migrated sub-range — report each with its new owner
@@ -226,6 +265,77 @@ object RedisSources {
   }
 }
 
+/** The connector's one SCAN cursor loop (≈ `FetchNextBatch`,
+  * redduck_extension.cpp:166-228): one page per round trip on one
+  * connection, empty-but-not-done pages skipped, each of `patterns`
+  * walked in order until its cursor returns "0".
+  *
+  *  - `limit` (a pushed LIMIT) stops the walk once that many DISTINCT
+  *    keys were returned. SCAN may return a key twice during a rehash
+  *    or migration (documented Redis behavior), so the budget counts
+  *    keys through a seen-set (bounded by the scanned prefix, ≈ n + one
+  *    page); without it a duplicate could occupy one of the n slots.
+  *  - `ownedSlots` (cluster mode) arms the end-of-cursor reshard guard
+  *    ([[RedisSources.verifySlotOwnership]]): a walk that reached the
+  *    end of every cursor fails loudly if this node's plan-time slots
+  *    moved meanwhile. It does NOT run when a LIMIT stopped the walk: a
+  *    LIMIT-without-ORDER answer of any n distinct matching keys cannot
+  *    be "incomplete", and the extra CLUSTER SLOTS round trip would tax
+  *    exactly the fast path the pushdown exists for.
+  */
+final class RedisScanWalker(conn: RedisConnection, patterns: Seq[String], count: Int,
+    scanType: Option[String], limit: Option[Int] = None,
+    ownedSlots: Seq[(Int, Int)] = Nil) {
+  private var patternIdx = 0
+  private var cursor = "0"
+  private var remaining = limit.getOrElse(Int.MaxValue)
+  private val seen = if (limit.isDefined) new java.util.HashSet[String]() else null
+  private var limitHit = false
+  private var guarded = false
+
+  /** The next non-empty page of keys; empty once the walk is over (and
+    * the reshard guard, if armed, has passed).
+    */
+  def nextPage(): Seq[String] = {
+    while (patternIdx < patterns.length && !limitHit) {
+      val (next, keys) = RedisCommands.scanPage(conn, cursor, patterns(patternIdx), count, scanType)
+      cursor = next
+      if (cursor == "0") patternIdx += 1
+      val page = if (seen == null) keys else withinLimit(keys)
+      if (page.nonEmpty) return page
+    }
+    if (!guarded && !limitHit) {
+      guarded = true
+      RedisSources.verifySlotOwnership(conn, ownedSlots)
+    }
+    Nil
+  }
+
+  def foreachPage(f: Seq[String] => Unit): Unit = {
+    var page = nextPage()
+    while (page.nonEmpty) { f(page); page = nextPage() }
+  }
+
+  private def withinLimit(keys: Seq[String]): Seq[String] = {
+    val page = keys.filter(seen.add).take(remaining)
+    remaining -= page.length
+    limitHit = remaining <= 0
+    page
+  }
+}
+
+object RedisScanWalker {
+  /** A driver-side full walk of one pattern: its distinct keys in
+    * first-seen order (SCAN may return a key twice across a rehash).
+    */
+  def distinctKeys(conn: RedisConnection, pattern: String, count: Int,
+      scanType: Option[String]): Seq[String] = {
+    val out = scala.collection.mutable.LinkedHashSet[String]()
+    new RedisScanWalker(conn, Seq(pattern), count, scanType).foreachPage(out ++= _)
+    out.toSeq
+  }
+}
+
 // ---------------------------------------------------------------------------
 // providers
 
@@ -234,7 +344,7 @@ class RedisScanProvider extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = RedisSources.ScanSchema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new RedisTable(fetchValues = false, RedisSources.parseOptions(properties))
+    new RedisTable(RedisSources.Keys, RedisSources.parseOptions(properties))
 }
 
 class RedisKvProvider extends TableProvider with DataSourceRegister {
@@ -242,7 +352,7 @@ class RedisKvProvider extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = RedisSources.KvSchema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new RedisTable(fetchValues = true, RedisSources.parseOptions(properties))
+    new RedisTable(RedisSources.Kv, RedisSources.parseOptions(properties))
 }
 
 /** Hash-typed keys as rows: SCAN pages resolved with one pipelined
@@ -258,117 +368,23 @@ class RedisHashProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "redis-hash"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = RedisSources.HashSchema
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val opts = RedisSources.parseOptions(properties)
-    new Table with SupportsRead {
-      override def name(): String = s"redis-hash(${opts.host}:${opts.port}, ${opts.pattern})"
-      override def schema(): StructType = RedisSources.HashSchema
-      override def capabilities(): util.Set[TableCapability] =
-        util.EnumSet.of(TableCapability.BATCH_READ)
-      override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-        new ScanBuilder with SupportsPushDownFilters {
-          private var pushedGlob: Option[String] = None
-          private var pushedArr: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-
-          override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-              : Array[org.apache.spark.sql.sources.Filter] = {
-            // same one-glob MATCH pushdown as the scan/kv sources
-            val canPush = opts.pattern == "*" && opts.partitionPatterns.isEmpty && opts.slots <= 1
-            if (canPush) {
-              val (tr, rest) = filters.partition(f =>
-                RedisSources.filterToGlob("key", f).isDefined)
-              tr.headOption.foreach(f => pushedGlob = RedisSources.filterToGlob("key", f))
-              pushedArr = tr.take(1)
-              rest ++ tr.drop(1)
-            } else { pushedArr = Array.empty; filters }
-          }
-          override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushedArr
-
-          override def build(): Scan = new Scan with Batch {
-            override def readSchema(): StructType = RedisSources.HashSchema
-            override def description(): String =
-              s"RedisHashScan(patterns=${opts.effectivePatterns(pushedGlob).map(_.mkString("|")).mkString(",")}, count=${opts.count})"
-            override def toBatch: Batch = this
-            override def planInputPartitions(): Array[InputPartition] =
-              if (opts.clusterMode)
-                RedisSources.clusterPartitions(opts, pushedGlob, None, None)
-              else opts.effectivePatterns(pushedGlob)
-                .map(ps => RedisInputPartition(opts.host, opts.port, ps, opts.count,
-                  auth = opts.auth, tls = opts.tls,
-                  tlsTrustAll = opts.tlsTrustAll,
-                  scanType = opts.scanType, resp3 = opts.resp3): InputPartition)
-                .toArray
-            override def createReaderFactory(): PartitionReaderFactory =
-              (partition: InputPartition) =>
-                new RedisHashPartitionReader(partition.asInstanceOf[RedisInputPartition])
-          }
-        }
-    }
-  }
-}
-
-class RedisHashPartitionReader(p: RedisInputPartition)
-    extends PartitionReader[InternalRow] {
-  import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
-
-  private val conn = new RedisConnection(p.host, p.port, auth = p.auth,
-    tls = p.tls, tlsTrustAll = p.tlsTrustAll, resp3 = p.resp3)
-  private var cursor = "0"
-  private var patternIdx = 0
-  private var done = false
-  private var batch: Iterator[InternalRow] = Iterator.empty
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (!batch.hasNext && !done) {
-      val (next, keys) = RedisCommands.scanPage(conn, cursor, p.patterns(patternIdx), p.count, p.scanType)
-      cursor = next
-      if (cursor == "0") {
-        patternIdx += 1
-        cursor = "0"
-        if (patternIdx >= p.patterns.length) done = true
-      }
-      if (keys.nonEmpty) {
-        val maps = RedisCommands.hgetallPipelined(conn, keys)
-        batch = keys.iterator.zip(maps.iterator).map { case (k, m) =>
-          val sorted = m.toSeq.sortBy(_._1) // deterministic field order
-          InternalRow(UTF8String.fromString(k),
-            ArrayBasedMapData(
-              sorted.map(e => UTF8String.fromString(e._1)).toArray,
-              sorted.map(e => UTF8String.fromString(e._2)).toArray))
-        }
-      }
-    }
-    if (batch.hasNext) { current = batch.next(); true }
-    else {
-      if (!guarded) { // cluster mode: reshard-during-scan fails loudly
-        guarded = true
-        RedisSources.verifySlotOwnership(conn, p.host, p.port, p.ownedSlots)
-      }
-      false
-    }
-  }
-  private var guarded = false
-
-  override def get(): InternalRow = current
-  override def close(): Unit = conn.close()
+      properties: util.Map[String, String]): Table =
+    new RedisTable(RedisSources.Hash, RedisSources.parseOptions(properties))
 }
 
 // ---------------------------------------------------------------------------
 // table / scan
 
-class RedisTable(fetchValues: Boolean, opts: RedisSources.Options)
+class RedisTable(mode: RedisSources.Mode, opts: RedisSources.Options)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String =
-    s"redis-${if (fetchValues) "kv" else "scan"}(${opts.host}:${opts.port}, ${opts.pattern})"
-  override def schema(): StructType =
-    if (fetchValues) RedisSources.KvSchema else RedisSources.ScanSchema
+  override def name(): String = s"${mode.format}(${opts.target})"
+  override def schema(): StructType = mode.schema
   override def capabilities(): util.Set[TableCapability] =
-    if (fetchValues) util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
+    if (mode == RedisSources.Kv) util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
     else util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new RedisScanBuilder(fetchValues, opts)
+    new RedisScanBuilder(mode, opts)
 
   /** Write path (kv mode): `df.write.format("redis-kv").mode("append")` —
     * each partition pipelines SET commands in `scan.count`-sized batches
@@ -379,7 +395,7 @@ class RedisTable(fetchValues: Boolean, opts: RedisSources.Options)
     */
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
-    require(fetchValues, "redis-scan is read-only; write with format(\"redis-kv\")")
+    require(mode == RedisSources.Kv, s"${mode.format} is read-only; write with format(\"redis-kv\")")
     val schema = info.schema()
     require(schema.fieldNames.toSeq == Seq("key", "value"),
       s"redis-kv write expects columns (key, value), got ${schema.fieldNames.mkString(",")}")
@@ -398,8 +414,7 @@ class RedisBatchWrite(opts: RedisSources.Options)
   override def createBatchWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DataWriterFactory =
-    new RedisDataWriterFactory(opts.host, opts.port, opts.count, opts.auth,
-      opts.tls, opts.tlsTrustAll, opts.resp3)
+    new RedisDataWriterFactory(opts.endpoint, opts.count)
   override def commit(messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = ()
   // no coordinator: SET is an idempotent upsert, so task retries are safe
@@ -409,19 +424,16 @@ class RedisBatchWrite(opts: RedisSources.Options)
 final case class RedisWriteCommit(written: Long)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
-class RedisDataWriterFactory(host: String, port: Int, batchSize: Int,
-    auth: Option[String] = None, tls: Boolean = false,
-    tlsTrustAll: Boolean = false, resp3: Boolean = false)
+class RedisDataWriterFactory(endpoint: RedisEndpoint, batchSize: Int)
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-      // resp3 rides to the WRITE connections too: resp=3 documents
-      // "HELLO 3 on every connection", and silently leaving writers on
-      // RESP2 would defeat protocol pinning against a RESP3-required
-      // proxy
-      private val conn = new RedisConnection(host, port, auth = auth,
-        tls = tls, tlsTrustAll = tlsTrustAll, resp3 = resp3)
+      // the endpoint carries resp3 to the WRITE connections too: resp=3
+      // documents "HELLO 3 on every connection", and silently leaving
+      // writers on RESP2 would defeat protocol pinning against a
+      // RESP3-required proxy
+      private val conn = new RedisConnection(endpoint)
       private val buf = scala.collection.mutable.ArrayBuffer[(String, String)]()
       private var written = 0L
 
@@ -450,10 +462,10 @@ class RedisDataWriterFactory(host: String, port: Int, batchSize: Int,
     }
 }
 
-class RedisScanBuilder(fetchValues: Boolean, opts: RedisSources.Options)
+class RedisScanBuilder(mode: RedisSources.Mode, opts: RedisSources.Options)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownLimit with SupportsPushDownTopN {
-  private val keyCol = if (fetchValues) "key" else "key_name"
+  private val keyCol = mode.keyCol
   private var pushedGlob: Option[String] = None
   private var pushed: Array[Filter] = Array.empty
   private var pushedLimit: Option[Int] = None
@@ -482,14 +494,14 @@ class RedisScanBuilder(fetchValues: Boolean, opts: RedisSources.Options)
     false
   }
 
-  /** ORDER BY <key> [ASC|DESC] LIMIT n: SCAN order is arbitrary, so the
-    * cursor must still drain — but each partition keeps only a bounded
-    * n-element heap and emits n keys instead of the whole keyspace (the
-    * transfer/memory win at scale). Partial: Spark re-sorts the ≤
-    * n×partitions survivors.
+  /** ORDER BY <key> [ASC|DESC] LIMIT n (key scans only): SCAN order is
+    * arbitrary, so the cursor must still drain — but each partition
+    * keeps only a bounded n-element heap and emits n keys instead of the
+    * whole keyspace (the transfer/memory win at scale). Partial: Spark
+    * re-sorts the ≤ n×partitions survivors.
     */
   override def pushTopN(orders: Array[SortOrder], limit: Int): Boolean = {
-    val sortable = !fetchValues && orders.length == 1 && (orders(0).expression() match {
+    val sortable = mode == RedisSources.Keys && orders.length == 1 && (orders(0).expression() match {
       case f: NamedReference => f.fieldNames().sameElements(Array(keyCol))
       case _ => false
     })
@@ -502,160 +514,123 @@ class RedisScanBuilder(fetchValues: Boolean, opts: RedisSources.Options)
   override def isPartiallyPushed(): Boolean = true
 
   override def build(): Scan =
-    new RedisScan(fetchValues, opts, pushedGlob, pushedLimit, pushedTopN)
+    new RedisScan(mode, opts, pushedGlob, pushedLimit, pushedTopN)
 }
 
-class RedisScan(fetchValues: Boolean, opts: RedisSources.Options, pushedGlob: Option[String],
+class RedisScan(mode: RedisSources.Mode, opts: RedisSources.Options, pushedGlob: Option[String],
     pushedLimit: Option[Int], pushedTopN: Option[RedisSources.TopN])
     extends Scan with Batch {
-  override def readSchema(): StructType =
-    if (fetchValues) RedisSources.KvSchema else RedisSources.ScanSchema
+  override def readSchema(): StructType = mode.schema
   override def description(): String = {
     val extras = pushedTopN.map(t => s", topN=${t.n} ${if (t.ascending) "ASC" else "DESC"}")
       .orElse(pushedLimit.map(l => s", limit=$l")).getOrElse("")
-    s"RedisScan(patterns=${opts.effectivePatterns(pushedGlob).map(_.mkString("|")).mkString(",")}, count=${opts.count}$extras)"
+    val name = if (mode == RedisSources.Hash) "RedisHashScan" else "RedisScan"
+    s"$name(patterns=${opts.effectivePatterns(pushedGlob).map(_.mkString("|")).mkString(",")}, count=${opts.count}$extras)"
   }
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
     if (opts.clusterMode)
       RedisSources.clusterPartitions(opts, pushedGlob, pushedLimit, pushedTopN)
     else opts.effectivePatterns(pushedGlob)
-      .map(ps => RedisInputPartition(opts.host, opts.port, ps, opts.count,
-        pushedLimit, pushedTopN, auth = opts.auth, tls = opts.tls,
-        tlsTrustAll = opts.tlsTrustAll, scanType = opts.scanType,
-        resp3 = opts.resp3): InputPartition)
+      .map(ps => RedisInputPartition(opts.endpoint, ps, opts.count,
+        pushedLimit, pushedTopN, scanType = opts.scanType): InputPartition)
       .toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new RedisReaderFactory(fetchValues)
+    new RedisReaderFactory(mode)
 }
 
 /** One partition = one connection running one SCAN cursor per pattern in
   * `patterns`, sequentially (slot shards put the complement class + the
   * exact-prefix literal in the same partition).
   */
-final case class RedisInputPartition(host: String, port: Int, patterns: Seq[String], count: Int,
+final case class RedisInputPartition(endpoint: RedisEndpoint, patterns: Seq[String], count: Int,
     limit: Option[Int] = None, topN: Option[RedisSources.TopN] = None,
-    auth: Option[String] = None, tls: Boolean = false,
-    tlsTrustAll: Boolean = false,
     // cluster mode: slot ranges this node owned at plan time (empty =
     // standalone; readers re-verify ownership at cursor end)
     ownedSlots: Seq[(Int, Int)] = Nil,
     // `SCAN ... TYPE t` server-side filter (scan.type option)
-    scanType: Option[String] = None,
-    // HELLO 3 per connection (resp option)
-    resp3: Boolean = false)
+    scanType: Option[String] = None)
     extends InputPartition {
-  // case-class toString would print the credential into task logs /
-  // debug dumps — mask it (present/absent is all an operator needs)
-  override def toString: String =
-    s"RedisInputPartition($host,$port,${patterns.mkString("|")},$count," +
-      s"limit=$limit,topN=$topN,auth=${if (auth.isDefined) "***" else "none"}," +
-      s"tls=$tls,tlsTrustAll=$tlsTrustAll" +
-      scanType.map(t => s",type=$t").getOrElse("") + ")"
+  /** This partition's walk on `conn`. A pushed topN drains the whole
+    * cursor: its heap, not the LIMIT, bounds what the partition emits.
+    */
+  def walker(conn: RedisConnection): RedisScanWalker =
+    new RedisScanWalker(conn, patterns, count, scanType,
+      limit.filter(_ => topN.isEmpty), ownedSlots)
 }
 
-class RedisReaderFactory(fetchValues: Boolean) extends PartitionReaderFactory {
+/** Key and kv scans read columnar (SURVEY §1.1 optimization item,
+  * completed r17): one ColumnarBatch per SCAN page, so Spark's codegen'd
+  * ColumnarToRow consumes vectors instead of row-at-a-time InternalRows.
+  * Rows are read only where a page does not map to a batch: pushed topN
+  * (a bounded heap with cross-page state) and hash scans (map values).
+  */
+class RedisReaderFactory(mode: RedisSources.Mode) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RedisInputPartition]
-    new RedisPartitionReader(p, fetchValues)
+    (mode, p.topN) match {
+      case (RedisSources.Hash, _) => new RedisHashPartitionReader(p)
+      case (_, Some(t)) => new RedisTopNPartitionReader(p, t)
+      case _ => throw new IllegalStateException(
+        s"${mode.format} without a pushed topN reads columnar")
+    }
   }
 
-  /** Columnar handoff (SURVEY §1.1 optimization item, completed r17):
-    * key scans AND kv scans emit one ColumnarBatch per SCAN page, so
-    * Spark's codegen'd ColumnarToRow consumes vectors instead of
-    * row-at-a-time InternalRows — kv pages resolve with the same ONE
-    * pipelined MGET as the row path, missing keys landing as vector
-    * nulls. Only pushed-topN (bounded heap with cross-page state)
-    * keeps the row reader.
-    */
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    partition.asInstanceOf[RedisInputPartition].topN.isEmpty
+    mode != RedisSources.Hash && partition.asInstanceOf[RedisInputPartition].topN.isEmpty
 
-  override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[RedisInputPartition]
-    new RedisColumnarPartitionReader(p, fetchValues)
-  }
+  override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new RedisColumnarPartitionReader(partition.asInstanceOf[RedisInputPartition],
+      fetchValues = mode == RedisSources.Kv)
 }
 
-/** Columnar key / kv scan: the SCAN cursor loop of
-  * [[RedisPartitionReader]], emitting each page as one ColumnarBatch —
-  * one string vector for key-only scans, (key, value) vectors with
-  * null-slot misses for kv mode.
+/** Columnar key / kv scan: each SCAN page becomes one ColumnarBatch —
+  * one string vector for key-only scans, (key, value) vectors for kv
+  * mode, the values resolved with one pipelined MGET per page (the
+  * batched replacement for the reference's per-row GET, SURVEY §3.3)
+  * and missing keys landing as vector nulls.
   */
 class RedisColumnarPartitionReader(p: RedisInputPartition, fetchValues: Boolean)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
-  private val conn = new RedisConnection(p.host, p.port, auth = p.auth,
-    tls = p.tls, tlsTrustAll = p.tlsTrustAll, resp3 = p.resp3)
-  private var cursor = "0"
-  private var patternIdx = 0
-  private var done = false
+  private val conn = new RedisConnection(p.endpoint)
+  private val walker = p.walker(conn)
   private var current: ColumnarBatch = _
-  private var remaining: Int = p.limit.getOrElse(Int.MaxValue)
 
   override def next(): Boolean = {
     if (current != null) { current.close(); current = null }
-    while (!done) {
-      val (next, keys) = RedisCommands.scanPage(conn, cursor, p.patterns(patternIdx), p.count, p.scanType)
-      cursor = next
-      if (cursor == "0") {
-        patternIdx += 1
-        cursor = "0"
-        if (patternIdx >= p.patterns.length) done = true
-      }
-      val page = limitPage(keys)
-      if (page.nonEmpty) {
-        val keyVec = new OnHeapColumnVector(page.length, StringType)
-        var i = 0
-        while (i < page.length) {
-          val bytes = page(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          keyVec.putByteArray(i, bytes, 0, bytes.length)
-          i += 1
-        }
-        current =
-          if (!fetchValues) new ColumnarBatch(Array(keyVec), page.length)
-          else {
-            // same one-pipelined-MGET-per-page as the row reader;
-            // a nil reply (missing/expired key) is a vector null.
-            // toIndexedSeq: the while loop below indexes — a linked
-            // Seq would make the page fill quadratic
-            val values = RedisCommands.mget(conn, page).toIndexedSeq
-            val valVec = new OnHeapColumnVector(page.length, StringType)
-            var j = 0
-            while (j < page.length) {
-              values(j) match {
-                case Some(v) =>
-                  val b = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                  valVec.putByteArray(j, b, 0, b.length)
-                case None => valVec.putNull(j)
-              }
-              j += 1
-            }
-            new ColumnarBatch(Array(keyVec, valVec), page.length)
+    val page = walker.nextPage()
+    if (page.isEmpty) return false
+    val keyVec = new OnHeapColumnVector(page.length, StringType)
+    var i = 0
+    while (i < page.length) {
+      val bytes = page(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      keyVec.putByteArray(i, bytes, 0, bytes.length)
+      i += 1
+    }
+    current =
+      if (!fetchValues) new ColumnarBatch(Array(keyVec), page.length)
+      else {
+        // a nil reply (missing/expired key) is a vector null.
+        // toIndexedSeq: the while loop below indexes — a linked
+        // Seq would make the page fill quadratic
+        val values = RedisCommands.mget(conn, page).toIndexedSeq
+        val valVec = new OnHeapColumnVector(page.length, StringType)
+        var j = 0
+        while (j < page.length) {
+          values(j) match {
+            case Some(v) =>
+              val b = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+              valVec.putByteArray(j, b, 0, b.length)
+            case None => valVec.putNull(j)
           }
-        return true
+          j += 1
+        }
+        new ColumnarBatch(Array(keyVec, valVec), page.length)
       }
-    }
-    if (!guarded && !limitHit) { // cluster reshard-during-scan fails loudly
-      guarded = true              // (skipped when a pushed LIMIT stopped us)
-      RedisSources.verifySlotOwnership(conn, p.host, p.port, p.ownedSlots)
-    }
-    false
-  }
-  private var guarded = false
-  private var limitHit = false
-  // distinct-key LIMIT accounting — see RedisPartitionReader.limitPage
-  private val seenForLimit =
-    if (p.limit.isDefined) new java.util.HashSet[String]() else null
-  private def limitPage(keys: Seq[String]): Seq[String] = {
-    if (remaining == Int.MaxValue) return keys
-    val fresh = keys.filter(seenForLimit.add)
-    val page = if (fresh.length > remaining) fresh.take(remaining) else fresh
-    remaining -= page.length
-    if (remaining <= 0) { done = true; limitHit = true } // pushed LIMIT satisfied
-    page
+    true
   }
 
   override def get(): ColumnarBatch = current
@@ -666,97 +641,54 @@ class RedisColumnarPartitionReader(p: RedisInputPartition, fetchValues: Boolean)
   }
 }
 
-/** Runs the SCAN cursor loop (≈ `FetchNextBatch`,
-  * redduck_extension.cpp:166-228): one page per round trip, internal
-  * retry on empty-but-not-done pages, done when the cursor returns "0".
-  * In kv mode each page is resolved with one pipelined MGET (the batched
-  * replacement for the reference's per-row GET, SURVEY §3.3).
+/** Hash scan: each SCAN page resolved with one pipelined HGETALL batch
+  * into (key, fields) rows.
   */
-class RedisPartitionReader(p: RedisInputPartition, fetchValues: Boolean)
+class RedisHashPartitionReader(p: RedisInputPartition)
     extends PartitionReader[InternalRow] {
+  import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 
-  private val conn = new RedisConnection(p.host, p.port, auth = p.auth,
-    tls = p.tls, tlsTrustAll = p.tlsTrustAll, resp3 = p.resp3)
-  private var cursor = "0"
-  private var patternIdx = 0
-  private var done = false
+  private val conn = new RedisConnection(p.endpoint)
+  private val walker = p.walker(conn)
   private var batch: Iterator[InternalRow] = Iterator.empty
   private var current: InternalRow = _
-  // plain-LIMIT budget: stop the cursor as soon as enough keys matched
-  private var remaining: Int = p.limit.filter(_ => p.topN.isEmpty).getOrElse(Int.MaxValue)
 
   override def next(): Boolean = {
-    p.topN match {
-      case Some(t) if batch.isEmpty && !done => batch = drainTopN(t)
-      case _ => ()
+    if (!batch.hasNext) {
+      val keys = walker.nextPage()
+      batch = keys.iterator.zip(RedisCommands.hgetallPipelined(conn, keys).iterator).map {
+        case (k, m) =>
+          val sorted = m.toSeq.sortBy(_._1) // deterministic field order
+          InternalRow(UTF8String.fromString(k),
+            ArrayBasedMapData(
+              sorted.map(e => UTF8String.fromString(e._1)).toArray,
+              sorted.map(e => UTF8String.fromString(e._2)).toArray))
+      }
     }
-    while (!batch.hasNext && !done) fetchNextBatch()
-    if (batch.hasNext) { current = batch.next(); true }
-    else { reshardGuard(); false }
-  }
-
-  // cluster mode: fail loudly (never silently short) if this node's
-  // plan-time slots moved while the cursor was walking. NOT run when
-  // the cursor stopped because a pushed LIMIT was satisfied: a
-  // LIMIT-without-ORDER answer of any n DISTINCT matching keys cannot
-  // be "incomplete", and the extra CLUSTER SLOTS round trip would tax
-  // exactly the fast path the pushdown exists for. The distinctness
-  // matters: SCAN may return a key twice during rehash/migration
-  // (documented Redis behavior), so the limit budget counts distinct
-  // keys via a seen-set (bounded by the scanned prefix, ≈ n + one
-  // page) — without it a duplicate could occupy one of the n slots.
-  private var guarded = false
-  private var limitHit = false
-  private val seenForLimit =
-    if (p.limit.exists(_ => p.topN.isEmpty)) new java.util.HashSet[String]() else null
-  private def reshardGuard(): Unit = if (!guarded && !limitHit) {
-    guarded = true
-    RedisSources.verifySlotOwnership(conn, p.host, p.port, p.ownedSlots)
-  }
-  /** Apply the pushed-LIMIT budget to a SCAN page: distinct-key
-    * accounting, early cursor stop when the budget is spent.
-    */
-  private def limitPage(keys: Seq[String]): Seq[String] = {
-    if (remaining == Int.MaxValue) return keys
-    val fresh = keys.filter(seenForLimit.add)
-    val page = if (fresh.length > remaining) fresh.take(remaining) else fresh
-    remaining -= page.length
-    if (remaining <= 0) { done = true; limitHit = true } // pushed LIMIT satisfied
-    page
+    if (batch.hasNext) { current = batch.next(); true } else false
   }
 
   override def get(): InternalRow = current
+  override def close(): Unit = conn.close()
+}
 
-  /** Cursor end: advance to this partition's next pattern, if any. */
-  private def cursorDone(): Unit = {
-    patternIdx += 1
-    cursor = "0"
-    if (patternIdx >= p.patterns.length) done = true
-  }
+/** Pushed ORDER BY key LIMIT n: drain the cursor (SCAN order is
+  * arbitrary — every key must be seen) but keep only an n-element
+  * bounded heap, so the partition emits n keys, not the keyspace.
+  */
+class RedisTopNPartitionReader(p: RedisInputPartition, t: RedisSources.TopN)
+    extends PartitionReader[InternalRow] {
 
-  private def fetchNextBatch(): Unit = {
-    val (next, keys) = RedisCommands.scanPage(conn, cursor, p.patterns(patternIdx), p.count, p.scanType)
-    cursor = next
-    if (cursor == "0") cursorDone()
-    val page = limitPage(keys)
-    if (page.nonEmpty) {
-      batch = if (!fetchValues) {
-        page.iterator.map(k => InternalRow(UTF8String.fromString(k)))
-      } else {
-        val values = RedisCommands.mget(conn, page)
-        page.iterator.zip(values.iterator).map { case (k, v) =>
-          InternalRow(UTF8String.fromString(k),
-            v.map(UTF8String.fromString).orNull)
-        }
-      }
-    }
-  }
+  private val conn = new RedisConnection(p.endpoint)
+  private lazy val rows: Iterator[InternalRow] = drain()
+  private var current: InternalRow = _
 
-  /** Pushed ORDER BY key LIMIT n: drain the cursor (SCAN order is
-    * arbitrary — every key must be seen) but keep only an n-element
-    * bounded heap, so the partition emits n keys, not the keyspace.
-    */
-  private def drainTopN(t: RedisSources.TopN): Iterator[InternalRow] = {
+  override def next(): Boolean =
+    if (rows.hasNext) { current = rows.next(); true } else false
+
+  override def get(): InternalRow = current
+
+  private def drain(): Iterator[InternalRow] = {
     // The heap MUST select with Spark's StringType ordering — UTF8String
     // binary (code-point) order — not java.lang.String's UTF-16 code-unit
     // order; they disagree on supplementary characters (emoji sort AFTER
@@ -769,27 +701,22 @@ class RedisPartitionReader(p: RedisInputPartition, fetchValues: Boolean)
     // max-heap of the n best-so-far: root is the WORST kept key
     val heap = new java.util.PriorityQueue[UTF8String](math.max(1, t.n), ord.reverse)
     // SCAN may return a key TWICE during a rehash/migration (the same
-    // documented behavior the LIMIT path dedups with its seen-set):
+    // documented behavior the LIMIT budget dedups with its seen-set):
     // without the dedup both copies would occupy heap slots, evicting a
     // distinct key that belongs in the true top-n — and evicted keys
     // are gone before Spark's re-sort can restore them. The set is
     // bounded by the keys ADMITTED to the heap's vicinity, not the
     // keyspace: only keys that beat the current worst are remembered.
     val seen = new java.util.HashSet[UTF8String]()
-    while (!done) {
-      val (next, keys) = RedisCommands.scanPage(conn, cursor, p.patterns(patternIdx), p.count, p.scanType)
-      cursor = next
-      if (cursor == "0") cursorDone()
-      keys.foreach { s =>
-        val k = UTF8String.fromString(s)
-        if (heap.size < t.n) {
-          if (seen.add(k)) heap.add(k)
-        } else if (heap.size > 0 && ord.lt(k, heap.peek()) && seen.add(k)) {
-          seen.remove(heap.poll())
-          heap.add(k)
-        }
+    p.walker(conn).foreachPage(_.foreach { s =>
+      val k = UTF8String.fromString(s)
+      if (heap.size < t.n) {
+        if (seen.add(k)) heap.add(k)
+      } else if (heap.size > 0 && ord.lt(k, heap.peek()) && seen.add(k)) {
+        seen.remove(heap.poll())
+        heap.add(k)
       }
-    }
+    })
     val out = new Array[UTF8String](heap.size)
     var i = out.length - 1
     while (i >= 0) { out(i) = heap.poll(); i -= 1 } // heap pops worst-first

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.net.{RedisCommands, RedisConnection}
+import graft.net.{RedisCommands, RedisConnection, RedisEndpoint}
 
 /** Structured Streaming source over the Redis keyspace: each micro-batch
   * emits the keys that APPEARED since the previous batch (snapshot diff
@@ -34,7 +34,8 @@ import graft.net.{RedisCommands, RedisConnection}
   *    it for monitoring/ingest-trigger pipelines, not exactly-once ETL.
   *  - Driver state is the seen-key set (bounded by keyspace size). The
   *    SCAN itself runs driver-side per trigger — one cursor, same cost
-  *    model as the reference's scan; executors only read the diff.
+  *    model as the reference's scan, `scan.type` filtering on the server
+  *    like the batch sources; executors only read the diff.
   *  - Deletions are not emitted (a SCAN diff sees only appearances);
   *    `key_name` matches the batch `redis-scan` schema so downstream
   *    plans (joins against `redis_kv`, `redis_get` lookups) are reusable.
@@ -49,7 +50,7 @@ class RedisKeyStreamProvider extends TableProvider
 }
 
 class RedisStreamTable(opts: RedisSources.Options) extends Table with SupportsRead {
-  override def name(): String = s"redis-key-stream(${opts.host}:${opts.port}, ${opts.pattern})"
+  override def name(): String = s"redis-key-stream(${opts.target})"
   override def schema(): StructType = RedisSources.ScanSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
@@ -77,34 +78,29 @@ class RedisKeyMicroBatchStream(opts: RedisSources.Options)
   private var snapshot = 0L
   private var initialized = false
 
+  /** One snapshot: the pattern's distinct keys (of `scan.type`, if set). */
   private def scanKeys(): Seq[String] = {
-    val conn = new RedisConnection(opts.host, opts.port, auth = opts.auth,
-      tls = opts.tls, tlsTrustAll = opts.tlsTrustAll, resp3 = opts.resp3)
-    try {
-      val out = Seq.newBuilder[String]
-      var cursor = "0"
-      var first = true
-      while (first || cursor != "0") {
-        first = false
-        val (next, keys) = RedisCommands.scanPage(conn, cursor, opts.pattern, opts.count)
-        cursor = next
-        out ++= keys
-      }
-      out.result()
-    } finally conn.close()
+    val conn = new RedisConnection(opts.endpoint)
+    try RedisScanWalker.distinctKeys(conn, opts.pattern, opts.count, opts.scanType)
+    finally conn.close()
   }
 
   override def initialOffset(): Offset = RedisStreamOffset(0L)
 
-  // Admission-control form: Spark hands us the START offset, which on a
-  // checkpoint restart is the restored committed offset N while this fresh
-  // instance's counter still sits at 0. Without the fast-forward the next
-  // snapshot would be numbered 1, planInputPartitions(N, 1) would emit
-  // nothing, and commit(1) would drop the buffered keys — silently
-  // swallowing the documented re-seed batch. Jumping the counter to N makes
-  // the first post-restart snapshot land at N+1 and actually re-emit the
-  // current keyspace. (The no-arg latestOffset() is never called once
-  // SupportsAdmissionControl is implemented.)
+  /** Checkpoint restart: the committed offset N survives (Spark passes it
+    * to `deserializeOffset` and as the admission-control START offset)
+    * but this fresh instance's counter restarts at 0. Without the
+    * fast-forward the next snapshot would be numbered 1,
+    * planInputPartitions(N, 1) would emit nothing, and commit(1) would
+    * drop the buffered keys — silently swallowing the documented re-seed
+    * batch. Jumping the counter to N makes the first post-restart
+    * snapshot land at N+1 and actually re-emit the current keyspace.
+    */
+  private def fastForward(restored: Long): Unit =
+    if (restored > snapshot) snapshot = restored
+
+  // the no-arg latestOffset() is never called once
+  // SupportsAdmissionControl is implemented
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
   override def latestOffset(): Offset =
@@ -112,10 +108,9 @@ class RedisKeyMicroBatchStream(opts: RedisSources.Options)
       "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = synchronized {
-    val restored = start.asInstanceOf[RedisStreamOffset].snapshot
-    if (restored > snapshot) snapshot = restored
-    val current = scanKeys()
-    val fresh = current.filterNot(seen)
+    fastForward(start.asInstanceOf[RedisStreamOffset].snapshot)
+    // scanKeys is distinct, so each new key is emitted once
+    val fresh = scanKeys().filterNot(seen)
     // the first snapshot is batch 1: existing keys are "new" to the query
     if (fresh.nonEmpty || !initialized) {
       initialized = true
@@ -146,14 +141,7 @@ class RedisKeyMicroBatchStream(opts: RedisSources.Options)
 
   override def deserializeOffset(json: String): Offset = synchronized {
     val restored = json.toLong
-    // Checkpoint restart: the committed offset N survives but this stream's
-    // in-memory counter restarts at 0. Without fast-forwarding, the next
-    // snapshot would be numbered 1 and planInputPartitions(N, 1) would emit
-    // nothing (and commit would drop the buffered keys) until the counter
-    // climbed past N — silently swallowing the re-seed batch. Jumping the
-    // counter to N makes the first post-restart snapshot land at N+1, so
-    // the current keyspace is actually re-emitted as documented above.
-    if (restored > snapshot) snapshot = restored
+    fastForward(restored)
     RedisStreamOffset(restored)
   }
 
@@ -361,7 +349,7 @@ class RedisStreamEntriesTable(opts: RedisSources.Options,
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   override def name(): String =
-    s"redis-stream(${opts.host}:${opts.port}, ${sopts.describe})"
+    s"redis-stream(${opts.endpoint.host}:${opts.endpoint.port}, ${sopts.describe})"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] = sopts.selection match {
     // single-stream and EXPLICIT multi-stream tables are writable (the
@@ -451,16 +439,14 @@ class RedisStreamEntriesTable(opts: RedisSources.Options,
     // ran and every write task threw
     RedisStreamWriterFactory.validateSinkSchema(info.schema(), sopts.idColumn,
       sopts.streamColumn.filter(_ => members.nonEmpty))
+    val write = new RedisStreamWrite(opts, target, info.schema(), sopts.idColumn,
+      sopts.maxLen, sopts.streamColumn, members)
     new org.apache.spark.sql.connector.write.WriteBuilder {
       override def build(): org.apache.spark.sql.connector.write.Write =
         new org.apache.spark.sql.connector.write.Write {
-          override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            new RedisStreamWrite(opts, target, info.schema(), sopts.idColumn,
-              sopts.maxLen, sopts.streamColumn, members)
+          override def toBatch: org.apache.spark.sql.connector.write.BatchWrite = write
           override def toStreaming
-              : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-            new RedisStreamWrite(opts, target, info.schema(), sopts.idColumn,
-              sopts.maxLen, sopts.streamColumn, members)
+              : org.apache.spark.sql.connector.write.streaming.StreamingWrite = write
         }
     }
   }
@@ -486,16 +472,13 @@ class RedisStreamEntriesTable(opts: RedisSources.Options,
         // oracle face of the streaming read (and a backfill path)
         override def toBatch: org.apache.spark.sql.connector.read.Batch = this
         override def planInputPartitions(): Array[InputPartition] =
-          RedisConnection.withPooled(opts.host, opts.port, opts.auth,
-              tls = opts.tls, tlsTrustAll = opts.tlsTrustAll,
-              resp3 = opts.resp3) { c =>
+          RedisConnection.withPooled(opts.endpoint) { c =>
             val multi = !sopts.selection.isInstanceOf[RedisStreamEntries.SingleStream]
             RedisMultiStreamMicroBatch.members(c, opts, sopts.selection).flatMap {
               stream => RedisCommands.xlast(c, stream).map(last =>
-                RedisStreamRange(opts.host, opts.port, stream,
+                RedisStreamRange(opts.endpoint, stream,
                   RedisStreamEntries.ZeroId, last, opts.count,
-                  opts.auth, opts.tls, opts.tlsTrustAll,
-                  emitStream = multi, resp3 = opts.resp3): InputPartition)
+                  emitStream = multi): InputPartition)
             }.toArray
           }
         override def createReaderFactory(): PartitionReaderFactory =
@@ -632,8 +615,7 @@ final case class RedisStreamWriterFactory(opts: RedisSources.Options,
         remaining.head
       else -1
     }
-    private val conn = new RedisConnection(opts.host, opts.port, auth = opts.auth,
-      tls = opts.tls, tlsTrustAll = opts.tlsTrustAll, resp3 = opts.resp3)
+    private val conn = new RedisConnection(opts.endpoint)
     // each pending XADD keeps its (stream, id, fields) so a server
     // rejection can be classified (replay vs genuine error) without
     // re-rendering
@@ -823,17 +805,11 @@ object RedisEntryMapOffset {
 /** One contiguous entry-ID range (exclusive start, inclusive end) of one
   * stream — the unit of replay.
   */
-final case class RedisStreamRange(host: String, port: Int, stream: String,
+final case class RedisStreamRange(endpoint: RedisEndpoint, stream: String,
     startExclusive: String, endInclusive: String, pageSize: Int,
-    auth: Option[String], tls: Boolean, tlsTrustAll: Boolean,
     // multi-stream reads prepend the origin stream column
-    emitStream: Boolean = false,
-    resp3: Boolean = false)
-    extends InputPartition {
-  override def toString: String =
-    s"RedisStreamRange($host,$port,$stream,($startExclusive,$endInclusive]," +
-      s"page=$pageSize,auth=${if (auth.isDefined) "***" else "none"})"
-}
+    emitStream: Boolean = false)
+    extends InputPartition
 
 object RedisStreamEntriesMicroBatch {
   import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
@@ -845,8 +821,7 @@ object RedisStreamEntriesMicroBatch {
   val readerFactory: PartitionReaderFactory = (partition: InputPartition) => {
     val p = partition.asInstanceOf[RedisStreamRange]
     new PartitionReader[InternalRow] {
-      private val conn = new RedisConnection(p.host, p.port, auth = p.auth,
-        tls = p.tls, tlsTrustAll = p.tlsTrustAll, resp3 = p.resp3)
+      private val conn = new RedisConnection(p.endpoint)
       private var cursor = p.startExclusive
       private var done = false
       private var batch: Iterator[InternalRow] = Iterator.empty
@@ -883,18 +858,47 @@ object RedisStreamEntriesMicroBatch {
   }
 }
 
-class RedisStreamEntriesMicroBatch(opts: RedisSources.Options,
+/** What the single- and multi-stream micro-batch faces share: pooled
+  * driver-side connections, the admission cap, the range reader, and no
+  * commit work — entries live on the server under the operator's
+  * retention policy (`XTRIM`), exactly like Kafka.
+  */
+abstract class RedisEntryMicroBatchBase(opts: RedisSources.Options,
     sopts: RedisStreamEntries.StreamOptions)
     extends MicroBatchStream with SupportsAdmissionControl
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
+  protected def withConn[T](f: RedisConnection => T): T =
+    RedisConnection.withPooled(opts.endpoint)(f)
+
+  /** One trigger's entry cap: Spark's ReadMaxRows, else the option. */
+  protected def capOf(limit: ReadLimit): Option[Int] = limit match {
+    case r: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
+      Some(r.maxRows().min(Int.MaxValue.toLong).toInt)
+    case _ => sopts.maxPerTrigger
+  }
+
+  override def getDefaultReadLimit: ReadLimit =
+    sopts.maxPerTrigger.map(n => ReadLimit.maxRows(n.toLong))
+      .getOrElse(ReadLimit.allAvailable())
+
+  override def latestOffset(): Offset =
+    throw new UnsupportedOperationException(
+      "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    RedisStreamEntriesMicroBatch.readerFactory
+
+  override def commit(end: Offset): Unit = ()
+  override def stop(): Unit = ()
+}
+
+class RedisStreamEntriesMicroBatch(opts: RedisSources.Options,
+    sopts: RedisStreamEntries.StreamOptions)
+    extends RedisEntryMicroBatchBase(opts, sopts) {
+
   private val stream: String =
     sopts.selection.asInstanceOf[RedisStreamEntries.SingleStream].name
-
-  private def withConn[T](f: RedisConnection => T): T =
-    RedisConnection.withPooled(opts.host, opts.port, opts.auth,
-      tls = opts.tls, tlsTrustAll = opts.tlsTrustAll,
-      resp3 = opts.resp3)(f)
 
   // Trigger.AvailableNow: snapshot the stream tip ONCE at query start;
   // every admission-capped batch then clamps to it, so the query drains
@@ -919,22 +923,9 @@ class RedisStreamEntriesMicroBatch(opts: RedisSources.Options,
     case RedisStreamEntries.StartAfter(id) => RedisEntryOffset(id)
   }
 
-  override def getDefaultReadLimit: ReadLimit =
-    sopts.maxPerTrigger.map(n => ReadLimit.maxRows(n.toLong))
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
-
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[RedisEntryOffset].id
-    val cap = limit match {
-      case r: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
-        Some(r.maxRows().min(Int.MaxValue.toLong).toInt)
-      case _ => sopts.maxPerTrigger
-    }
-    val end = cap match {
+    val end = capOf(limit) match {
       case Some(n) => withConn(c =>
         RedisCommands.xrange(c, stream, "(" + from, "+", Some(n)))
         .lastOption.map(_.id)
@@ -954,21 +945,10 @@ class RedisStreamEntriesMicroBatch(opts: RedisSources.Options,
     val s = start.asInstanceOf[RedisEntryOffset].id
     val e = end.asInstanceOf[RedisEntryOffset].id
     if (RedisCommands.compareStreamIds(e, s) <= 0) Array.empty
-    else Array(RedisStreamRange(opts.host, opts.port, stream, s, e,
-      opts.count, opts.auth, opts.tls, opts.tlsTrustAll,
-      resp3 = opts.resp3))
+    else Array(RedisStreamRange(opts.endpoint, stream, s, e, opts.count))
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    RedisStreamEntriesMicroBatch.readerFactory
-
   override def deserializeOffset(json: String): Offset = RedisEntryOffset(json)
-
-  /** Nothing to release: entries live on the server under the
-    * operator's retention policy (`XTRIM`), exactly like Kafka.
-    */
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 object RedisMultiStreamMicroBatch {
@@ -985,17 +965,7 @@ object RedisMultiStreamMicroBatch {
     case SingleStream(n) => Seq(n)
     case MultiStreams(ns) => ns
     case PatternStreams(glob) =>
-      val out = Seq.newBuilder[String]
-      var cursor = "0"
-      var first = true
-      while (first || cursor != "0") {
-        first = false
-        val (next, keys) = RedisCommands.scanPage(c, cursor, glob, opts.count,
-          scanType = Some("stream"))
-        cursor = next
-        out ++= keys
-      }
-      out.result().distinct.sorted
+      RedisScanWalker.distinctKeys(c, glob, opts.count, scanType = Some("stream")).sorted
   }
 }
 
@@ -1034,14 +1004,8 @@ object RedisMultiStreamMicroBatch {
   */
 class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
     sopts: RedisStreamEntries.StreamOptions)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+    extends RedisEntryMicroBatchBase(opts, sopts) {
   import RedisStreamEntries._
-
-  private def withConn[T](f: RedisConnection => T): T =
-    RedisConnection.withPooled(opts.host, opts.port, opts.auth,
-      tls = opts.tls, tlsTrustAll = opts.tlsTrustAll,
-      resp3 = opts.resp3)(f)
 
   private def membersNow(c: RedisConnection): Seq[String] =
     RedisMultiStreamMicroBatch.members(c, opts, sopts.selection)
@@ -1068,21 +1032,9 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
     }.toMap)
   }
 
-  override def getDefaultReadLimit: ReadLimit =
-    sopts.maxPerTrigger.map(n => ReadLimit.maxRows(n.toLong))
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
-
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val restored = start.asInstanceOf[RedisEntryMapOffset].ids
-    val cap = limit match {
-      case r: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
-        Some(r.maxRows().min(Int.MaxValue.toLong).toInt)
-      case _ => sopts.maxPerTrigger
-    }
+    val cap = capOf(limit)
     withConn { c =>
       // during an AvailableNow drain membership is the pinned set;
       // otherwise re-resolve (new pattern matches enter at 0-0)
@@ -1189,21 +1141,11 @@ class RedisMultiStreamMicroBatch(opts: RedisSources.Options,
     e.toSeq.sortBy(_._1).flatMap { case (stream, endId) =>
       val from = s.getOrElse(stream, ZeroId)
       if (RedisCommands.compareStreamIds(endId, from) <= 0) None
-      else Some(RedisStreamRange(opts.host, opts.port, stream, from, endId,
-        opts.count, opts.auth, opts.tls, opts.tlsTrustAll,
-        emitStream = true, resp3 = opts.resp3): InputPartition)
+      else Some(RedisStreamRange(opts.endpoint, stream, from, endId,
+        opts.count, emitStream = true): InputPartition)
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    RedisStreamEntriesMicroBatch.readerFactory
-
   override def deserializeOffset(json: String): Offset =
     RedisEntryMapOffset(RedisEntryMapOffset.parse(json))
-
-  /** Like the single-stream source: retention (`XTRIM`) is the
-    * server operator's policy; nothing to release here.
-    */
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }

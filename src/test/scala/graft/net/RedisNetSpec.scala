@@ -198,7 +198,7 @@ class RedisNetSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("RESP3 live mode: HELLO 3 handshake, map-typed HGETALL, set frame, ignored out-of-band push") {
-    val c3 = new RedisConnection("127.0.0.1", port, resp3 = true)
+    val c3 = new RedisConnection(RedisEndpoint("127.0.0.1", port, resp3 = true))
     try {
       // the handshake already validated proto=3; commands behave identically
       c3.ping()

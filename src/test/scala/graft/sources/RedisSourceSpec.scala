@@ -90,6 +90,19 @@ class RedisSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         .option("pattern", "mixed:*").option("scan.type", "hash").load()
         .collect().map(_.getString(0)).toSeq
       assert(hashRows == Seq("mixed:h1"))
+      // the redis-key-stream snapshot walk sends the same TYPE filter:
+      // its first batch holds the hash key only
+      val keyStream = spark.readStream.format("redis-key-stream")
+        .option("host", "127.0.0.1").option("port", port)
+        .option("pattern", "mixed:*").option("scan.type", "hash").load()
+        .writeStream.format("memory").queryName("scan_type_key_stream")
+        .outputMode("append").start()
+      try {
+        graft.StreamTestGuard.drain(keyStream)
+        val streamed = spark.sql("SELECT key_name FROM scan_type_key_stream")
+          .collect().map(_.getString(0)).toSeq
+        assert(streamed == Seq("mixed:h1"), s"key stream ignored scan.type: $streamed")
+      } finally keyStream.stop()
       // invalid type name fails at option-parse time, naming the values
       val e = intercept[IllegalArgumentException] {
         spark.read.format("redis-scan")
@@ -381,6 +394,28 @@ class RedisSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(limited.collect().length == 3)
     assert(server.scanCalls < fullTrips,
       s"pushed limit did not cut round trips: ${server.scanCalls} vs $fullTrips")
+    // redis-hash takes the same pushed LIMIT: 10 hash:* keys over COUNT-2
+    // pages, LIMIT 3 stops the cursor before the full walk
+    val extra = (1 to 8).map(i => f"hash:lim$i%02d")
+    extra.foreach(k => server.putHash(k, Map("f" -> k)))
+    try {
+      val hashes = spark.read.format("redis-hash")
+        .option("host", "127.0.0.1").option("port", port)
+        .option("pattern", "hash:*").option("scan.count", "2")
+      server.resetScanCalls()
+      assert(hashes.load().collect().length == 10)
+      val hashFullTrips = server.scanCalls
+      server.resetScanCalls()
+      val hashLimited = hashes.load().limit(3)
+      val hashLeaf = hashLimited.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
+      assert(hashLeaf.contains("limit=3"), s"expected pushed limit in hash scan:\n$hashLeaf")
+      assert(hashLimited.collect().length == 3)
+      assert(server.scanCalls < hashFullTrips,
+        s"pushed limit did not cut hash round trips: ${server.scanCalls} vs $hashFullTrips")
+    } finally {
+      val conn = new graft.net.RedisConnection("127.0.0.1", port)
+      try conn.command("DEL" +: extra: _*) finally conn.close()
+    }
   }
 
   test("pushed ORDER BY + LIMIT keeps an n-element heap per partition") {
@@ -610,6 +645,57 @@ class RedisSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(chain(bad).exists(m => m.contains("SSL") || m.contains("PKIX") ||
         m.contains("certificate")), chain(bad).mkString(" | "))
     } finally tlsServer.stop()
+  }
+
+  test("cluster redirects keep TLS and the credential: a MOVED value fetch reaches the TLS target") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tls-moved").toString
+    val ks = s"$dir/server.p12"
+    val gen = new ProcessBuilder("keytool", "-genkeypair", "-alias", "redis",
+      "-keyalg", "RSA", "-keysize", "2048", "-validity", "2",
+      "-dname", "CN=localhost", "-keystore", ks, "-storetype", "PKCS12",
+      "-storepass", "changeit", "-keypass", "changeit")
+      .redirectErrorStream(true).start()
+    assert(gen.waitFor() == 0, "keytool failed")
+    val nodeA = new FakeRedisServer(tlsKeystore = Some((ks, "changeit")))
+    val nodeB = new FakeRedisServer(tlsKeystore = Some((ks, "changeit")))
+    Seq(nodeA, nodeB).foreach(_.setRequirePass("clusterpw"))
+    nodeA.put("mv:1", "stale") // SCAN on the seed node lists the key ...
+    nodeB.put("mv:1", "moved-value") // ... but its slot now lives on B
+    val portA = nodeA.start()
+    val portB = nodeB.start()
+    nodeA.setMoved("mv:", s"127.0.0.1:$portB")
+    try {
+      val rows = spark.read.format("redis-kv")
+        .option("host", "127.0.0.1").option("port", portA.toString)
+        .option("tls", "true").option("tls.trustAll", "true")
+        .option("password", "clusterpw").option("pattern", "mv:*").load()
+        .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+      assert(rows == Seq("mv:1" -> "moved-value"))
+    } finally { nodeA.stop(); nodeB.stop() }
+  }
+
+  test("malformed connector options fail at load, naming the option") {
+    def load(key: String, value: String) = spark.read.format("redis-scan")
+      .option("host", "127.0.0.1").option("port", port)
+      .option("pattern", "testkey:*").option(key, value).load()
+    // scan.count=0 used to return an empty result (the cursor ends at
+    // once); a malformed number or boolean used to fail with a bare
+    // "For input string" that named no option
+    Seq("scan.count" -> "0", "port" -> "abc", "partition.slots" -> "-1",
+        "tls" -> "yes", "tls.trustAll" -> "maybe").foreach { case (k, v) =>
+      val e = intercept[IllegalArgumentException](load(k, v).collect())
+      assert(chain(e).contains(s"'$k'") && chain(e).contains(v), s"$k=$v: ${chain(e)}")
+    }
+  }
+
+  test("partitions print their endpoint with the credential masked") {
+    val p = RedisInputPartition(graft.net.RedisEndpoint("127.0.0.1", port,
+      auth = Some("svc s3cret"), tls = true), Seq("k:*"), 16)
+    val shown = p.toString
+    assert(!shown.contains("s3cret") && shown.contains("auth=***") &&
+      shown.contains(s"127.0.0.1:$port"), shown)
+    val r = RedisStreamRange(p.endpoint, "s", "0-0", "1-1", 16)
+    assert(!r.toString.contains("s3cret") && r.toString.contains("auth=***"), r.toString)
   }
 
   // -- Redis Streams (XADD/XRANGE/XLEN + the redis-stream source) ---------
@@ -1201,7 +1287,7 @@ class RedisSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       try {
         graft.StreamTestGuard.drain(q)
         assert(spark.table("xlat").count() == 0)
-        val c = new graft.net.RedisConnection("127.0.0.1", aport, auth = Some("xpw"))
+        val c = new graft.net.RedisConnection(graft.net.RedisEndpoint("127.0.0.1", aport, auth = Some("xpw")))
         try RedisCommands.xadd(c, "xs:auth", "9-1", Seq("v" -> "new")) finally c.close()
         graft.StreamTestGuard.drain(q)
         assert(spark.table("xlat").collect().map(_.getString(0)).toSeq == Seq("9-1"))
